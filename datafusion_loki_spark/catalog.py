@@ -73,17 +73,23 @@ def _est_scan_tasks(path: str) -> "int | None":
     and no RDD-conversion probe (the cost `_spread`'s docstring warns
     about), so it is safe to call on every load_table.
 
-    Returns None — "can't tell" — for any path the LOCAL filesystem
-    cannot list: a scheme-prefixed URI (s3://, hdfs:// — i.e. exactly
-    the at-scale deployment) or a dir with no visible parquet files.
-    The caller must treat None as FAIL CLOSED (skip the fan-out): the
-    r15 shape returned 1 here, which would have round-robin-shuffled
-    every payload byte of a full-corpus remote scan (r16 worklist #2)."""
+    A ``file://`` URI is a local path and is estimated like the bare
+    path. Returns None — "can't tell" — for any path the LOCAL
+    filesystem cannot list: any other scheme-prefixed URI (s3://,
+    hdfs:// — i.e. exactly the at-scale deployment) or a dir with no
+    visible parquet files. The caller must treat None as FAIL CLOSED
+    (skip the fan-out): the r15 shape returned 1 here, which would have
+    round-robin-shuffled every payload byte of a full-corpus remote
+    scan (r16 worklist #2)."""
     import glob
     import re
+    from urllib.parse import urlparse
 
-    # scheme-prefixed URI: not a local path, os.stat would lie
-    if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", path):
+    url = urlparse(path)
+    if url.scheme == "file" and url.netloc in ("", "localhost"):
+        path = url.path
+    elif re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", path):
+        # remote URI: not a local path, os.stat would lie
         return None
     if os.path.isfile(path):
         files = [path]

@@ -11,13 +11,26 @@ materializations from a small thread pool lets each job's tasks
 back-fill executors freed by the others' stragglers instead of leaving
 the cluster idle between actions. FIFO scheduling (the default) gives
 exactly the back-fill behaviour wanted; results are returned in thunk
-order and the first exception propagates unchanged.
+order and the first exception propagates unchanged. Each thread runs
+under the caller's job group, description, scheduler pool and tags, so
+cancelling the caller's group or tag cancels every job a thunk starts.
 
 This changes WHEN the same jobs run, never what they compute — every
 thunk is the identical eager call the operator previously made inline.
 """
 
 from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.util import inheritable_thread_target
+
+
+def _inheriting(spark, thunk):
+    """``thunk`` wrapped, in the calling thread, to run under that
+    thread's local properties and tags. Each call takes its own copy, so
+    one worker thread's property changes never leak into another's."""
+    wrap = inheritable_thread_target(spark)
+    # pinned-thread mode off: it hands the session back, nothing to copy
+    return thunk if wrap is spark else wrap(thunk)
 
 
 def materialize_concurrently(spark, *thunks):
@@ -36,5 +49,5 @@ def materialize_concurrently(spark, *thunks):
     if not enabled or len(thunks) == 1:
         return tuple(t() for t in thunks)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(_inheriting(spark, t)) for t in thunks]
         return tuple(f.result() for f in futures)

@@ -1206,7 +1206,8 @@ def _dec20(x: float):
 # local replay and the distributed loop are provably the same arithmetic
 _DEC20_SUM_BOUND = 10.0**18
 
-# per-application verdict cache of the JVM-stringification canary below
+# verdict cache of the JVM-stringification canary below, keyed by
+# (applicationId, digest of the sampled values)
 _REPLAY_CANARY_OK: dict = {}
 
 
@@ -1227,9 +1228,11 @@ def _decimal_replay_safe(spark: SparkSession, E) -> bool:
         on older JVMs run a ONE-JOB canary comparing Spark's own
         double→decimal(38,20)→string cast against _dec20 on a bounded
         deterministic subsample (extremes + strides) of the actual
-        values, cached per application. Sampled, not exhaustive — the
-        bit-exactness pins in tests/ verify full equality on the test
-        corpora; the canary catches a systematically divergent JVM."""
+        values, cached per (application, sample) — a later fit whose
+        values sample differently runs its own canary. Sampled, not
+        exhaustive — the bit-exactness pins in tests/ verify full
+        equality on the test corpora; the canary catches a
+        systematically divergent JVM."""
     import numpy as np
 
     if E.size == 0:
@@ -1246,19 +1249,25 @@ def _decimal_replay_safe(spark: SparkSession, E) -> bool:
             return True
     except (TypeError, ValueError):
         pass
-    app_id = spark.sparkContext.applicationId
-    ok = _REPLAY_CANARY_OK.get(app_id)
-    if ok is None:
-        flat = E.ravel()
-        idx = np.unique(
-            np.concatenate(
-                [
-                    np.arange(0, flat.size, max(1, flat.size // 509)),
-                    [int(np.argmin(flat)), int(np.argmax(flat))],
-                ]
-            )
+    import hashlib
+
+    flat = E.ravel()
+    idx = np.unique(
+        np.concatenate(
+            [
+                np.arange(0, flat.size, max(1, flat.size // 509)),
+                [int(np.argmin(flat)), int(np.argmax(flat))],
+            ]
         )
-        sample = [float(v) for v in np.unique(flat[idx])]
+    )
+    values = np.unique(flat[idx]).astype(np.float64)
+    key = (
+        spark.sparkContext.applicationId,
+        hashlib.blake2b(values.tobytes(), digest_size=16).digest(),
+    )
+    ok = _REPLAY_CANARY_OK.get(key)
+    if ok is None:
+        sample = [float(v) for v in values]
         cols = [
             F.lit(v).cast("decimal(38,20)").cast("string") for v in sample
         ]
@@ -1272,7 +1281,7 @@ def _decimal_replay_safe(spark: SparkSession, E) -> bool:
             s is not None and Decimal(s) == _dec20(v)
             for v, s in zip(sample, jvm_strs)
         )
-        _REPLAY_CANARY_OK[app_id] = ok
+        _REPLAY_CANARY_OK[key] = ok
         if len(_REPLAY_CANARY_OK) > 64:  # long-lived driver hygiene
             _REPLAY_CANARY_OK.pop(next(iter(_REPLAY_CANARY_OK)))
     return ok

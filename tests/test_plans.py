@@ -867,6 +867,30 @@ def test_overlap_helper_order_kill_switch_and_errors(spark):
         materialize_concurrently(spark, lambda: 1, boom)
 
 
+def test_overlap_threads_keep_caller_job_group(spark):
+    # jobs started on the overlap helper's threads must stay in the
+    # caller's job group, or cancelJobGroup leaves them running
+    from datafusion_loki_spark.functions.overlap import (
+        materialize_concurrently,
+    )
+
+    sc = spark.sparkContext
+    group = "overlap-inherits-group"
+
+    def job(n):
+        return spark.range(n).count(), sc.getLocalProperty("spark.jobGroup.id")
+
+    sc.setJobGroup(group, "overlap job-group inheritance")
+    try:
+        got = materialize_concurrently(spark, lambda: job(10), lambda: job(20))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert got == ((10, group), (20, group))
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
+
+
 def test_overlap_kill_switch_matches_concurrent(spark, sf_dir):
     # change 8 changes WHEN the eager sub-DAGs run, never what they
     # compute: the sequential (kill-switch) composition must emit the
@@ -1458,6 +1482,13 @@ def test_est_scan_tasks_split_math(tmp_path):
     assert _est_scan_tasks(str(a)) == 1
     assert _est_scan_tasks(str(tmp_path)) == 2
     assert _est_scan_tasks(str(tmp_path / "missing")) is None
+    # file:// is a local path: estimated like the bare path
+    assert _est_scan_tasks(a.as_uri()) == 1
+    assert _est_scan_tasks(tmp_path.as_uri()) == 2
+    assert _est_scan_tasks("file://localhost" + str(tmp_path)) == 2
+    assert _est_scan_tasks("file:" + str(tmp_path)) == 2
+    assert _est_scan_tasks((tmp_path / "missing").as_uri()) is None
+    assert _est_scan_tasks("file://nfs-host" + str(tmp_path)) is None
     assert _est_scan_tasks("s3://bucket/corpus/documents") is None
     assert _est_scan_tasks("hdfs://nn:8020/warehouse/docs") is None
     assert _est_scan_tasks("abfss://c@acct.dfs.example.net/docs") is None

@@ -189,3 +189,45 @@ def test_compact_ivf_members_folds_append_files_value_identically(
     stats2 = compact_ivf_members(spark, index_dir)
     assert stats2["files_after"] == stats["files_after"]
     assert probe_rows() == before
+
+
+def test_replay_canary_runs_per_value_sample(spark, monkeypatch):
+    # The pre-JDK-19 stringification canary is cached per (application,
+    # sampled values), not per application: a later fit whose values sit
+    # in a different regime (exponent-notation shortest reprs) must run
+    # its own one-job canary instead of reusing the first fit's verdict.
+    from types import SimpleNamespace
+
+    import numpy as np
+
+    from datafusion_loki_spark.operators import similarity
+
+    class _PreJdk19Session:
+        # forces the canary branch on any JVM and counts canary jobs
+        def __init__(self, inner):
+            self.sparkContext = inner.sparkContext
+            self._jvm = SimpleNamespace(
+                java=SimpleNamespace(
+                    lang=SimpleNamespace(
+                        System=SimpleNamespace(getProperty=lambda _k: "17")
+                    )
+                )
+            )
+            self._inner = inner
+            self.canary_jobs = 0
+
+        def range(self, *args):
+            self.canary_jobs += 1
+            return self._inner.range(*args)
+
+    monkeypatch.setattr(similarity, "_REPLAY_CANARY_OK", {})
+    session = _PreJdk19Session(spark)
+    plain = np.array([[0.5, 1.25, -3.75], [2.0, 0.125, 7.5]])
+    tiny = np.array([[1.5e-7, -2.25e-9, 3.0e-6], [4.0e-8, 5.5e-10, -6.0e-7]])
+    assert similarity._decimal_replay_safe(session, plain) is True
+    assert session.canary_jobs == 1
+    assert similarity._decimal_replay_safe(session, tiny) is True
+    assert session.canary_jobs == 2
+    # the same values again reuse the cached verdict: no third job
+    assert similarity._decimal_replay_safe(session, plain.copy()) is True
+    assert session.canary_jobs == 2
