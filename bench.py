@@ -299,28 +299,28 @@ def _min_of_2(fn, spark, sf_dir: str) -> float:
     the entire apparent r06→r07 per-calib drift — so their min needs
     one more sample to be stable.
 
-    Round 16 (r15 VERDICT next-#7): after the timed runs, the query's
-    localCheckpoint blocks are released explicitly — each run builds a
-    FRESH DAG (so nothing here is consumed again), but the dead blocks
-    otherwise pin block-manager memory for the ContextCleaner's ~30 min
-    cadence and the 93-query suite pays the accumulation as late-suite
-    GC drag (round 15 measured the forced-GC alternative at 5-11x
-    single-query stalls and rejected it). The release runs OUTSIDE
-    every timing window; the timing loop itself is unchanged."""
+    Each run's localCheckpoint blocks are released explicitly before
+    the next run starts — each run builds a FRESH DAG (so nothing here
+    is consumed again), but the dead blocks otherwise pin block-manager
+    memory for the ContextCleaner's ~30 min cadence, so every run would
+    time against the previous runs' leftovers and the 93-query suite
+    would pay the accumulation as late-suite GC drag (round 15 measured
+    the forced-GC alternative at 5-11x single-query stalls and rejected
+    it). The release runs OUTSIDE every timing window."""
     from datafusion_loki_spark.functions.checkpoints import (
         free_checkpoints,
         persistent_rdd_ids,
     )
 
-    pre = persistent_rdd_ids(spark)
     best = float("inf")
     for i in range(3):
         if i == 2 and best >= 0.5:
             break
+        pre = persistent_rdd_ids(spark)
         t0 = time.perf_counter()
         fn(spark, sf_dir).count()
         best = min(best, time.perf_counter() - t0)
-    free_checkpoints(spark, persistent_rdd_ids(spark) - pre)
+        free_checkpoints(spark, persistent_rdd_ids(spark) - pre)
     return round(best, 4)
 
 
@@ -369,7 +369,7 @@ def _isolated_pass(names: list[str], sf_dir: str) -> dict[str, float]:
 
 def _shared_pass(
     names: list[str], sf_dir: str
-) -> tuple[dict[str, float], list[list[float]], dict[str, float]]:
+) -> tuple[dict[str, float], list[list[float]], dict[str, float], str]:
     from datafusion_loki_spark.session import get_spark
 
     import __spark_entry__ as entrymod
@@ -412,8 +412,9 @@ def _shared_pass(
     # that degrades mid-suite shows up in the spread instead of
     # silently biasing the denominator
     samples += _calibration_samples(spark, clock0)
+    run_id = spark.sparkContext.applicationId
     spark.stop()
-    return timings, samples, q_end
+    return timings, samples, q_end, run_id
 
 
 def main() -> None:
@@ -435,7 +436,7 @@ def main() -> None:
     else:
         names = [n for n in BENCH_QUERIES if n in registered]
 
-    shared, timeline, q_end = _shared_pass(names, sf_dir)
+    shared, timeline, q_end, run_id = _shared_pass(names, sf_dir)
     total = round(sum(shared.values()), 4)
     import statistics
 
@@ -447,7 +448,8 @@ def main() -> None:
     # stored tail truncated mid-JSON on the embedded tens-of-KB timeline
     # maps and the driver lost all round-over-round per-query comparison.
     # Same timing methodology, same keys otherwise; the sidecar carries
-    # exactly what the line used to embed.
+    # what the line used to embed, and both carry the run's
+    # applicationId so a later run's sidecar is never merged into it.
     sidecar_name = "bench_timelines.json"
     sidecar_path = os.environ.get(
         "SPARK_GRAFT_BENCH_SIDECAR",
@@ -459,6 +461,7 @@ def main() -> None:
         with open(sidecar_path, "w") as f:
             json.dump(
                 {
+                    "run_id": run_id,
                     "calibration_timeline": timeline,
                     "query_end_times": q_end,
                 },
@@ -476,6 +479,7 @@ def main() -> None:
         "calibration_spread": spread,
         "calibration_samples": secs,
         "timelines_sidecar": sidecar_path,
+        "run_id": run_id,
         "value_per_calib": round(total / calib, 3) if calib else None,
         "methodology": (
             "value: one-JVM suite, warmup at sf0.001 then min-of-2 per "

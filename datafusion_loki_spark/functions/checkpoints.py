@@ -8,19 +8,38 @@ one-JVM session (the bench suite, a job server) accumulates every
 operator's materialized intermediates in the block manager and pays the
 memory pressure as late-session drag (round-15 measured the forced-GC
 alternative and rejected it: multi-second stop-the-world stalls).
-These helpers release the blocks EXPLICITLY at the points where the
-producing operator can prove no consumer remains (round-15 VERDICT
-next-#7) — promoted here in round 16 from text.py's BPE-loop-private
-versions so every operator family can use them.
 
-Contract: diff ``persistent_rdd_ids`` TIGHTLY around the checkpoints to
-free, with no CONCURRENT checkpoint activity in the window (the repo's
-sessions run queries sequentially; the overlap helper's threads join
-before their caller continues) — a captured foreign id freed later
-breaks that query's reads with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
+Operators free a checkpoint by its OWN frame: ``release(frame)`` on the
+frame ``localCheckpoint`` returned, at the point where no consumer of it
+remains. The frame names exactly one RDD, so a release is correct no
+matter what other threads checkpoint at the same time (the overlap
+helper runs whole operators on parallel driver threads).
+
+The id-set pair below is for harnesses that bracket one whole
+SEQUENTIAL query: diff the persistent ids before and after it, then
+free the difference. The ids cover every thread's checkpoints, so the
+pair must never run while another query is live in the session.
 """
 
 from __future__ import annotations
+
+
+def release(*frames) -> None:
+    """Free the block-manager copies behind the given localCheckpoint
+    frames. Each frame's analyzed plan is the ``LogicalRDD`` over its
+    checkpoint RDD; a derived frame (``df.select(...)``) has no
+    checkpoint of its own and raises ``ValueError`` before anything is
+    freed. Only call on state with NO remaining consumer: a freed
+    checkpoint's reads fail loudly."""
+    plans = [df._jdf.queryExecution().analyzed() for df in frames]
+    for plan in plans:
+        if plan.getClass().getSimpleName() != "LogicalRDD":
+            raise ValueError(
+                "release() takes the frame localCheckpoint returned, got "
+                f"a {plan.getClass().getSimpleName()} plan"
+            )
+    for plan in plans:
+        plan.rdd().unpersist(False)
 
 
 def persistent_rdd_ids(spark) -> set:

@@ -31,6 +31,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from datafusion_loki_spark.functions.checkpoints import release
+
 
 def write_partitioned(
     df: DataFrame,
@@ -108,6 +110,7 @@ def compact_partitions(
         files_per_partition=files_per_partition,
         codec=codec,
     )
+    release(staged)  # the rewrite was its only consumer
     return n
 
 

@@ -492,14 +492,11 @@ def _cc_labels(sym: DataFrame) -> DataFrame:
     cap = _cc_local_cap(spark)
     if cap > 0 and sym.count() <= cap:
         return _cc_labels_local(spark, sym.collect())
-    from datafusion_loki_spark.functions.checkpoints import (
-        free_checkpoints,
-        persistent_rdd_ids,
-    )
+    from datafusion_loki_spark.functions.checkpoints import release
 
     nodes = sym.select(F.col("src").alias("doc_id")).distinct()
     labels = nodes.withColumn("cluster_id", F.col("doc_id"))
-    prev_ids: set = set()
+    prev = None
     while True:
         # min over own label and all neighbors' labels
         neighbor_min = (
@@ -507,7 +504,6 @@ def _cc_labels(sym: DataFrame) -> DataFrame:
             .groupBy(F.col("dst").alias("doc_id"))
             .agg(F.min("cluster_id").alias("nbr_min"))
         )
-        pre = persistent_rdd_ids(spark)
         step = (
             labels.join(neighbor_min, "doc_id", "left")
             .select(
@@ -519,12 +515,12 @@ def _cc_labels(sym: DataFrame) -> DataFrame:
             )
             .localCheckpoint(eager=True)  # truncate lineage per round
         )
-        step_ids = persistent_rdd_ids(spark) - pre
         # the PREVIOUS round's checkpoint has no consumer once this
         # round's is materialized (VERDICT r15 next-#7): release it
         # instead of pinning O(diameter) dead label copies
-        free_checkpoints(spark, prev_ids)
-        prev_ids = step_ids
+        if prev is not None:
+            release(prev)
+        prev = step
         changed = step.where(F.col("cluster_id") != F.col("old_label")).count()
         labels = step.select("doc_id", "cluster_id")
         if changed == 0:
@@ -791,15 +787,10 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH the banding/pair generation and the estimator's signature side
     read the checkpoint, where the r15 shape re-ran the shingle explode +
     8-minhash aggregation once per consumer."""
-    from datafusion_loki_spark.functions.checkpoints import (
-        free_checkpoints,
-        persistent_rdd_ids,
-    )
+    from datafusion_loki_spark.functions.checkpoints import release
 
     docs = load_table(spark, sf_dir, "documents")
-    pre = persistent_rdd_ids(spark)
     sig_full = minhash_signatures(docs).localCheckpoint(eager=True)
-    sig_full_ids = persistent_rdd_ids(spark) - pre
     cand = _lsh_pairs_from_sig(sig_full).localCheckpoint(eager=True)
     ids = (
         cand.select(F.col("doc_a").alias("doc_id"))
@@ -814,7 +805,7 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the doc-scale signature checkpoint is DEAD once its two consumers
     # (cand, sig) are materialized — release it now (VERDICT r15 next-#7)
     # instead of pinning it until the ContextCleaner's next GC cycle
-    free_checkpoints(spark, sig_full_ids)
+    release(sig_full)
     a = sig.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"mh{j}").alias(f"a{j}") for j in range(N_MINHASH)],
@@ -2437,8 +2428,8 @@ def dedup_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the plan): Spark has no cross-branch subtree reuse, and
     materializing the token-scale gram frame to dodge one CPU-bound
     scan pass would cost a corpus-sized write — lineage recompute is
-    the cheaper side of that trade at every scale (the localCheckpoint
-    rule in PLANS.md is for SMALL multiply-consumed frames). Nothing
+    the cheaper side of that trade at every scale (a localCheckpoint
+    pays only on SMALL multiply-consumed frames). Nothing
     collects, nothing is quadratic: O(tokens) rows through two
     shuffles. dup_frac is a single IEEE division of two exact ints —
     bit-identical across engines, no summation-order hazard."""

@@ -3514,15 +3514,11 @@ def retrain_ivf_index(spark: SparkSession, index_dir: str) -> dict:
         f"{index_dir}/{old_base_name}" if old_base_name else index_dir
     )
     new_version = (versions[-1] if versions else 0) + 1
-    from datafusion_loki_spark.functions.checkpoints import (
-        free_checkpoints,
-        persistent_rdd_ids,
-    )
+    from datafusion_loki_spark.functions.checkpoints import release
 
     newest = Window.partitionBy("vec_id").orderBy(
         F.desc("gen"), F.asc("cluster_id")
     )
-    pre_ckpt = persistent_rdd_ids(spark)
     live_d = (
         ivf_members_versioned(spark, old_base)
         .select("vec_id", "e", "gen", "cluster_id")
@@ -3531,7 +3527,6 @@ def retrain_ivf_index(spark: SparkSession, index_dir: str) -> dict:
         .select("vec_id", "e")
         .localCheckpoint(eager=True)
     )
-    live_ids = persistent_rdd_ids(spark) - pre_ckpt
     seeds = live_d.orderBy("vec_id").limit(KMEANS_K)
     assigned, cents = _kmeans_fit(
         live_d, live_d.where(F.expr(_TRAIN_PRED_SPARK)), seeds_d=seeds
@@ -3606,7 +3601,7 @@ def retrain_ivf_index(spark: SparkSession, index_dir: str) -> dict:
     }
     # the live-view checkpoint is dead: the new base is written, the
     # stats above were its last read (VERDICT r15 next-#7)
-    free_checkpoints(spark, live_ids)
+    release(live_d)
     return stats
 
 

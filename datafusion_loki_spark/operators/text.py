@@ -16,6 +16,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from datafusion_loki_spark.catalog import load_table
+from datafusion_loki_spark.functions.checkpoints import release
 
 # Shared normalization: lowercase, collapse whitespace. The Spark and DuckDB
 # forms below MUST stay in lockstep — they are the two halves of the oracle
@@ -1383,15 +1384,6 @@ def text_bpe_vocab(
     )
 
 
-# round 16: promoted to functions/checkpoints.py (VERDICT r15 next-#7 —
-# every operator family now frees provably-dead checkpoint state); these
-# aliases keep the BPE loop's round-11 call sites unchanged
-from datafusion_loki_spark.functions.checkpoints import (  # noqa: E402
-    free_checkpoints as _free_checkpoints,
-    persistent_rdd_ids as _persistent_rdd_ids,
-)
-
-
 # a word is touched by the batch iff its symbol string contains a rule's
 # ' s1 s2 ' adjacency (symbols are space-free and space-joined). EXACT:
 # the fold's first merge requires an un-merged s1 directly before an s2,
@@ -1606,9 +1598,7 @@ def _bpe_train(
         "if(size(toks) >= 2, transform(sequence(1, size(toks) - 1),"
         " i -> struct(toks[i - 1] AS s1, toks[i] AS s2)), array())"
     )
-    pre = _persistent_rdd_ids(spark)
     cur = vocab.localCheckpoint(eager=True)
-    cur_ids = _persistent_rdd_ids(spark) - pre
     n_rounds = BPE_ITERS if iters is None else iters
     cap = _bpe_local_cap(spark)
     # scale gate (OPTIMIZATION_r15 change 5): a bounded vocabulary
@@ -1618,7 +1608,7 @@ def _bpe_train(
     # whenever the vocabulary is genuinely unbounded
     if cap > 0 and cur.count() <= cap:
         rows = cur.collect()
-        _free_checkpoints(spark, cur_ids)
+        release(cur)
         return _bpe_train_local(spark, rows, n_rounds)
 
     def _pair_counts(frame, s_col: str, sign: int):
@@ -1634,15 +1624,11 @@ def _bpe_train(
         )
 
     # init: the one full vocab-scale pair count, materialized as state.
-    # Superseded counts/vocab checkpoints are freed each round via
-    # _free_checkpoints (round-11 review: the loop otherwise pins every
-    # dead round's copy for the app lifetime). Batch frames are RETURNED
-    # and never freed; the live cur survives the loop; ids are captured
-    # tightly around each eager materialization (see _persistent_rdd_ids
-    # for the concurrency caveat).
-    pre = _persistent_rdd_ids(spark)
+    # Superseded counts/vocab checkpoints are released each round
+    # (round-11 review: the loop otherwise pins every dead round's copy
+    # for the app lifetime). Batch frames are RETURNED and never freed;
+    # the live cur survives the loop.
     counts = _pair_counts(cur, "s", 1).localCheckpoint(eager=True)
-    counts_ids = _persistent_rdd_ids(spark) - pre
     batches = []
     for _ in range(n_rounds):
         cands = counts.orderBy(
@@ -1682,19 +1668,16 @@ def _bpe_train(
         delta = _pair_counts(aff, "s_old", -1).unionByName(
             _pair_counts(aff, "s_new", 1)
         )
-        pre = _persistent_rdd_ids(spark)
-        counts = (
+        new_counts = (
             counts.unionByName(delta)
             .groupBy("s1", "s2")
             .agg(F.sum("pair_count").alias("pair_count"))
             .where(F.col("pair_count") > 0)
             .localCheckpoint(eager=True)
         )
-        new_counts_ids = _persistent_rdd_ids(spark) - pre
         # vocab rewrite: interpreted fold ONLY on affected rows; the
         # projection itself is scan-speed and shuffle-free
-        pre = _persistent_rdd_ids(spark)
-        cur = (
+        new_cur = (
             cur.crossJoin(bcast)
             .select(
                 "w",
@@ -1705,14 +1688,13 @@ def _bpe_train(
             )
             .localCheckpoint(eager=True)
         )
-        new_cur_ids = _persistent_rdd_ids(spark) - pre
         # both successors are materialized — the previous round's state
         # has no remaining consumer (batch frames have their own blocks)
-        _free_checkpoints(spark, counts_ids | cur_ids)
-        counts_ids, cur_ids = new_counts_ids, new_cur_ids
+        release(counts, cur)
+        counts, cur = new_counts, new_cur
     # the final count table has no consumer after the loop; the final
     # cur is returned live
-    _free_checkpoints(spark, counts_ids)
+    release(counts)
     return batches, cur
 
 

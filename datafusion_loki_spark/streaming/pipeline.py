@@ -24,6 +24,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from datafusion_loki_spark.functions.checkpoints import release
+
 EVENTS_SCHEMA_NS = (
     "event_id long, ts long, user_id long, event_type string, value double,"
     " props string"
@@ -581,6 +583,8 @@ def rollup_to_parquet(
             .option("compression", "zstd")
             .parquet(path)
         )
+        if merged is not out:  # the merge checkpoint: dead once written
+            release(merged)
 
     return (
         windowed.writeStream.outputMode("update")

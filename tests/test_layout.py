@@ -67,6 +67,7 @@ def test_compact_partitions_merges_small_files(spark, sf_dir, tmp_path):
     import glob
     import os
 
+    from datafusion_loki_spark.functions.checkpoints import persistent_rdd_ids
     from datafusion_loki_spark.functions.layout import compact_partitions
 
     docs = _docs(spark, sf_dir)
@@ -87,8 +88,11 @@ def test_compact_partitions_merges_small_files(spark, sf_dir, tmp_path):
     }
     assert any(n > 3 for n in before.values()), before  # fragmented
     expected = docs.count()
+    pre = persistent_rdd_ids(spark)
     n = compact_partitions(spark, out, partition_by=["lang"], cluster_by=["n_chars"])
     assert n == expected
+    # the whole-table staging checkpoint is released once rewritten
+    assert not persistent_rdd_ids(spark) - pre
     after = {
         lang_dir: len(glob.glob(os.path.join(out, lang_dir, "*.parquet")))
         for lang_dir in os.listdir(out)

@@ -891,6 +891,97 @@ def test_overlap_threads_keep_caller_job_group(spark):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
 
 
+def test_overlap_cancel_job_group_cancels_every_thunk(spark):
+    # cancelling the caller's job group must cancel the jobs the overlap
+    # helper's threads started, not leave them running to completion
+    import threading
+    import time
+
+    from datafusion_loki_spark.functions.overlap import (
+        materialize_concurrently,
+    )
+
+    sc = spark.sparkContext
+    group = "overlap-cancel"
+    raised, outcome = [], []
+
+    def slow(n):
+        # one task that counts far past any test's lifetime
+        try:
+            return spark.range(0, 10**13, 1, 1).where(f"id % 7 != {n}").count()
+        except Exception as e:
+            raised.append(e)
+            raise
+
+    def caller():
+        sc.setJobGroup(group, "overlap cancellation", interruptOnCancel=True)
+        try:
+            outcome.append(
+                materialize_concurrently(spark, lambda: slow(1), lambda: slow(2))
+            )
+        except Exception as e:
+            outcome.append(e)
+
+    def running():
+        st = sc.statusTracker()
+        return [
+            j
+            for j in st.getJobIdsForGroup(group)
+            if (info := st.getJobInfo(j)) is not None
+            and info.status == "RUNNING"
+        ]
+
+    t = threading.Thread(target=caller, daemon=True)
+    t.start()
+    deadline = time.monotonic() + 120
+    while len(running()) < 2 and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert len(running()) == 2, "both thunks' jobs should be active"
+    sc.cancelJobGroup(group)
+    t.join(timeout=120)
+    assert not t.is_alive(), "the cancelled composition did not return"
+    assert len(raised) == 2, raised
+    assert len(outcome) == 1 and isinstance(outcome[0], Exception), outcome
+    # the status store trails the scheduler; give it a moment to settle
+    deadline = time.monotonic() + 30
+    while running() and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert running() == []
+
+
+def test_release_frees_only_its_own_checkpoint(spark):
+    # a checkpoint is freed by its own frame, so a second live
+    # checkpoint (another thread's, say) is never touched
+    from datafusion_loki_spark.functions.checkpoints import release
+
+    a = spark.range(100).localCheckpoint(eager=True)
+    b = spark.range(50).localCheckpoint(eager=True)
+    release(a)
+    assert b.count() == 50
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        a.count()
+    # a derived frame has no checkpoint of its own
+    with pytest.raises(ValueError):
+        release(b.select("*"))
+    release(b)
+
+
+def test_ship_card_distributed_cc_under_overlap(spark, sf_dir):
+    # corpus_ship_card runs its text and media halves on overlap
+    # threads; with the distributed CC loop forced (the path of every
+    # graph above the local cap) each CC round must free only its own
+    # checkpoint, never the other thread's live ones
+    from datafusion_loki_spark.operators.multimodal import corpus_ship_card
+
+    base = sorted(map(tuple, corpus_ship_card(spark, sf_dir).collect()))
+    spark.conf.set("spark_graft.cc.local_labels.max_edges", "0")
+    try:
+        dist = sorted(map(tuple, corpus_ship_card(spark, sf_dir).collect()))
+    finally:
+        spark.conf.unset("spark_graft.cc.local_labels.max_edges")
+    assert base and base == dist
+
+
 def test_overlap_kill_switch_matches_concurrent(spark, sf_dir):
     # change 8 changes WHEN the eager sub-DAGs run, never what they
     # compute: the sequential (kill-switch) composition must emit the

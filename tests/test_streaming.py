@@ -337,6 +337,7 @@ def test_rollup_to_parquet_multi_batch_no_data_loss(spark, sf_dir, tmp_path):
     # force two micro-batches with maxFilesPerTrigger=1 — after the drain the
     # sink must equal the full batch rollup (earlier windows survive).
     from datafusion_loki_spark.catalog import load_table
+    from datafusion_loki_spark.functions.checkpoints import persistent_rdd_ids
 
     ev = load_table(spark, sf_dir, "events")
     src = tmp_path / "src"
@@ -356,6 +357,7 @@ def test_rollup_to_parquet_multi_batch_no_data_loss(spark, sf_dir, tmp_path):
         .withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     )
     out = str(tmp_path / "rollup")
+    pre = persistent_rdd_ids(spark)
     q = pipeline.rollup_to_parquet(
         pipeline.windowed_event_counts(stream), out, str(tmp_path / "ck")
     )
@@ -364,6 +366,8 @@ def test_rollup_to_parquet_multi_batch_no_data_loss(spark, sf_dir, tmp_path):
     assert progress is not None and int(progress["batchId"]) >= 1, (
         "expected at least two micro-batches"
     )
+    # each batch's merge checkpoint is released once written
+    assert not persistent_rdd_ids(spark) - pre
     batch = (
         ev.withColumn("ts", F.col("ts").cast("timestamp"))
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")

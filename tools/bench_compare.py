@@ -22,15 +22,24 @@ def _merge_sidecar(d: dict) -> dict:
     """Round 16: bench.py writes the per-sample timelines to a sidecar
     file (the embedded maps made the headline line long enough that the
     driver's stored tail truncated mid-JSON) — fold them back in when
-    the referenced file is still readable; silently degrade to the
-    timeline-less compare otherwise."""
+    the referenced file is still readable and was written by the same
+    run (matching ``run_id``; every bench run overwrites the sidecar);
+    degrade to the timeline-less compare otherwise."""
     sc = d.get("timelines_sidecar")
     if sc and "query_end_times" not in d:
         try:
             with open(sc) as f:
-                d.update(json.load(f))
+                side = json.load(f)
         except (OSError, ValueError):
-            pass
+            return d
+        if side.get("run_id") != d.get("run_id"):
+            print(
+                f"note: {sc} is from run {side.get('run_id')}, not "
+                f"{d.get('run_id')} — timelines not merged",
+                file=sys.stderr,
+            )
+            return d
+        d.update(side)
     return d
 
 

@@ -1,11 +1,11 @@
 """Dump the formatted physical plans of the headline benchmark queries.
 
-With no arguments, regenerate PLANS.md: the formatted physical plan of
-every headline benchmark query at sf0.1 — the at-a-glance evidence that
-each plan has the shape the scale design calls for (broadcasts on
-dimension joins, TakeOrderedAndProject for top-k, PushedFilters at the
-scan, bounded exchange counts, WholeStageCodegen spans over the hot
-expressions).
+With no arguments, write PLANS.md (generated on demand, not kept in
+git): the formatted physical plan of every headline benchmark query at
+sf0.1 — the at-a-glance evidence that each plan has the shape the scale
+design calls for (broadcasts on dimension joins, TakeOrderedAndProject
+for top-k, PushedFilters at the scan, bounded exchange counts,
+WholeStageCodegen spans over the hot expressions).
 
 With arguments, write one `.explain("formatted")` file per query for a
 before/after comparison: plans/<round>/<query>_<tag>.txt for each named
